@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from shacl_spark.functions.terms import TRIPLE_SCHEMA
+from shacl_spark.shacl import incremental
 from shacl_spark.shacl.engine import REPORT_OUT_SCHEMA
 from shacl_spark.shacl.incremental import incremental_revalidate
 from shacl_spark.shacl.parser import parse_shapes_graph
@@ -91,7 +92,6 @@ class StreamingValidator:
         # next batch rebuilds from the durable target (bounded by the
         # same cap as the collect path).
         self._edges = None
-        self._edge_cap = 500_000
 
     # --- report versions --------------------------------------------------------
 
@@ -174,6 +174,17 @@ class StreamingValidator:
         # the journal has served its purpose; without it a replay takes
         # the normal path, recomputes an empty delta, and no-ops
         shutil.rmtree(self._delta_dir(epoch_id), ignore_errors=True)
+
+    def _roll_edges(self, journal: DataFrame) -> None:
+        """Roll the cached adjacency forward to the post-append graph
+        (``journal`` rows are the exact net delta; op '-' retracts);
+        drop it when it drifted or outgrew the collect cap."""
+        if self._edges is None:
+            return
+        fp = incremental.shapes_footprint(self.shapes)
+        self._edges.apply_delta(journal.toArrow(), fp)
+        if self._edges.dirty or self._edges.over_cap():
+            self._edges = None
 
     def _on_batch(self, batch: DataFrame, epoch_id: int) -> None:
         applied = None
@@ -264,14 +275,7 @@ class StreamingValidator:
         open(os.path.join(self._delta_dir(epoch_id), f"_fp_{fp}"), "w").close()
         self.sink._append(applied)
         cur = self.sink.current() if self.cdc else self.sink.current(dedup=False)
-        if self._edges is not None:
-            # roll the cached adjacency forward to the post-append graph
-            # (journal rows are the exact net delta; op '-' retracts)
-            from shacl_spark.shacl.incremental import shapes_footprint
-
-            self._edges.apply_delta(journal.collect(), shapes_footprint(self.shapes))
-            if self._edges.dirty or self._edges.n_rows > self._edge_cap:
-                self._edges = None
+        self._roll_edges(journal)
         if not self._versions():
             # first batch: there is nothing to merge and the delta IS
             # the graph — a plain full validation gives the identical
@@ -284,13 +288,10 @@ class StreamingValidator:
             # is the natural place to pay the one bounded edge collect,
             # so the first CDC batch already runs in the steady state
             # instead of collecting the full-graph adjacency cold
-            from shacl_spark.shacl.incremental import (
-                collect_local_edges,
-                shapes_footprint,
-            )
-
-            self._edges = collect_local_edges(
-                cur, shapes_footprint(self.shapes), self._edge_cap
+            self._edges = incremental.collect_local_edges(
+                cur,
+                incremental.shapes_footprint(self.shapes),
+                incremental.EDGE_COLLECT_MAX,
             )
         else:
             st: dict = {}

@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from shacl_spark.functions.terms import RDF, RDFS, SH, XSD, triples_from_rows
+from shacl_spark.shacl import incremental as inc_mod
 from shacl_spark.shacl import validate
 from shacl_spark.shacl.incremental import (
     incremental_revalidate,
@@ -84,18 +85,21 @@ def _check_equiv(spark, base_rows, new_rows, changed_rows):
     full = _canon(validate(spark, new, SHAPES))
     # BOTH execution paths must equal full revalidation: the local
     # interpreter fast path (default; small slices collect to the
-    # driver) and the distributed Validator path (local_max_rows=0)
+    # driver) and the distributed Validator path (LOCAL_MAX_ROWS = 0)
     stats: dict = {}
     inc = incremental_revalidate(
         spark, new, changed, SHAPES, prev, stats=stats
     )
     assert _canon(inc) == full, f"local-path mismatch ({stats.get('mode')})"
     stats_d: dict = {}
-    inc_d = incremental_revalidate(
-        spark, new, changed, SHAPES, prev, local_max_rows=0, stats=stats_d
-    )
-    assert _canon(inc_d) == full, f"distributed-path mismatch ({stats_d.get('mode')})"
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(inc_mod, "LOCAL_MAX_ROWS", 0)
+        inc_d = incremental_revalidate(
+            spark, new, changed, SHAPES, prev, stats=stats_d
+        )
+        assert _canon(inc_d) == full, f"distributed-path mismatch ({stats_d.get('mode')})"
     assert stats_d.get("mode") != "incremental_local"
+    return stats, stats_d
 
 
 def test_footprint_analysis():
@@ -201,43 +205,52 @@ def test_inverse_path_direction(spark):
 def test_untouched_rows_carry_over_without_recompute(spark):
     """The merged report must KEEP prev rows for unaffected focus nodes
     and the affected set must stay small for a local delta."""
-    from shacl_spark.shacl.incremental import affected_node_keys
-
-    base = triples_from_rows(spark, _base_rows())
-    changed = triples_from_rows(
-        spark, [("ex:p3", "ex:name", "N3", "literal", STR)]
+    base_rows = _base_rows()
+    added = [("ex:p3", "ex:name", "N3", "literal", STR)]
+    new = triples_from_rows(spark, base_rows + added)
+    prev = validate(spark, triples_from_rows(spark, base_rows), SHAPES)
+    st: dict = {}
+    inc = incremental_revalidate(
+        spark, new, triples_from_rows(spark, added), SHAPES, prev, stats=st
     )
-    fp = shapes_footprint(parse_shapes_graph(SHAPES))
-    aff = affected_node_keys(spark, base, changed, fp)
-    ids = {r["node"] for r in aff.collect()}
-    assert "ex:p3" in ids
     # the delta is p3-local: bounded neighborhood, not the whole graph
-    assert len(ids) < 10
+    assert st["mode"] == "incremental"
+    assert 0 < st["affected"] < 10
+    assert _canon(inc) == _canon(validate(spark, new, SHAPES))
+
+
+# sh:path (ex:q [sh:zeroOrMorePath ex:p]) over a p-chain longer than
+# the footprint depth (2); adding the chain end's type fixes ex:f
+CHAIN_SHAPES = [
+    ("ex:CS", T, SH + "NodeShape"),
+    ("ex:CS", SH + "targetClass", "ex:Head"),
+    ("ex:CS", SH + "property", "ex:CP"),
+    ("ex:CP", SH + "path", "ex:cseq/0"),
+    ("ex:cseq/0", RDF + "first", "ex:q"),
+    ("ex:cseq/0", RDF + "rest", "ex:cseq/1"),
+    ("ex:cseq/1", RDF + "first", "ex:cstar"),
+    ("ex:cseq/1", RDF + "rest", RDF + "nil"),
+    ("ex:cstar", SH + "zeroOrMorePath", "ex:p"),
+    ("ex:CP", SH + "class", "ex:Ok"),
+]
+
+
+def _chain_rows(k: int = 6) -> tuple[list, list]:
+    base = [("ex:f", T, "ex:Head"), ("ex:f", "ex:q", "ex:n0")]
+    for i in range(k):
+        base.append((f"ex:n{i}", "ex:p", f"ex:n{i + 1}"))
+    for i in range(k):  # n0..n{k-1} typed Ok; the chain END is not
+        base.append((f"ex:n{i}", T, "ex:Ok"))
+    return base, [(f"ex:n{k}", T, "ex:Ok")]
+
 
 def test_fixpoint_then_hop_sequence_path(spark):
     """ADVICE r03 (high): for sh:path (ex:q [sh:zeroOrMorePath ex:p])
     the backward dependency walk is p-fixpoint THEN the final q hop —
     a p-chain longer than the depth bound is only reached by the
     fixpoint, and the non-recursive q hop must still run afterwards."""
-    shapes = [
-        ("ex:CS", T, SH + "NodeShape"),
-        ("ex:CS", SH + "targetClass", "ex:Head"),
-        ("ex:CS", SH + "property", "ex:CP"),
-        ("ex:CP", SH + "path", "ex:cseq/0"),
-        ("ex:cseq/0", RDF + "first", "ex:q"),
-        ("ex:cseq/0", RDF + "rest", "ex:cseq/1"),
-        ("ex:cseq/1", RDF + "first", "ex:cstar"),
-        ("ex:cseq/1", RDF + "rest", RDF + "nil"),
-        ("ex:cstar", SH + "zeroOrMorePath", "ex:p"),
-        ("ex:CP", SH + "class", "ex:Ok"),
-    ]
-    K = 6  # chain length > footprint depth (2)
-    base = [("ex:f", T, "ex:Head"), ("ex:f", "ex:q", "ex:n0")]
-    for i in range(K):
-        base.append((f"ex:n{i}", "ex:p", f"ex:n{i + 1}"))
-    for i in range(K):  # n0..n{K-1} typed Ok; the chain END is not
-        base.append((f"ex:n{i}", T, "ex:Ok"))
-    added = [(f"ex:n{K}", T, "ex:Ok")]  # fixes the violation at ex:f
+    shapes = CHAIN_SHAPES
+    base, added = _chain_rows()
 
     base_df = triples_from_rows(spark, base)
     new_df = triples_from_rows(spark, base + added)
@@ -248,6 +261,29 @@ def test_fixpoint_then_hop_sequence_path(spark):
     )
     assert _canon(inc) == _canon(validate(spark, new_df, shapes))
     assert inc.isEmpty()  # the stale ex:f row must NOT carry over
+
+
+def test_spark_hop_fallback(spark, monkeypatch):
+    """Above the edge-collect cap every hop is one broadcast-join Spark
+    job: a zero cap forces that path for a 2-hop scenario (both the
+    local and the distributed validation) and for the fixpoint-then-hop
+    chain, whose context expansion also runs on Spark hops."""
+    monkeypatch.setattr(inc_mod, "EDGE_COLLECT_MAX", 0)
+    _removed, added = SCENARIOS["org_gains_city"]
+    base = _base_rows()
+    for st in _check_equiv(spark, base, base + added, added):
+        assert st["edge_mode"] == "spark_hops"
+
+    base, added = _chain_rows()
+    new_df = triples_from_rows(spark, base + added)
+    prev = validate(spark, triples_from_rows(spark, base), CHAIN_SHAPES)
+    st: dict = {}
+    inc = incremental_revalidate(
+        spark, new_df, triples_from_rows(spark, added), CHAIN_SHAPES, prev, stats=st
+    )
+    assert st["edge_mode"] == "spark_hops" and "context_nodes" in st
+    assert _canon(inc) == _canon(validate(spark, new_df, CHAIN_SHAPES))
+    assert inc.isEmpty()
 
 
 def test_sparql_bgp_reaches_this_in_object_position(spark):
@@ -280,29 +316,31 @@ def test_sparql_bgp_reaches_this_in_object_position(spark):
     assert _canon(inc) == _canon(full)  # the NEW violation must appear
 
 
+def _op_rows(spark, rows, op):
+    return triples_from_rows(spark, rows).withColumn("op", F.lit(op))
+
+
 def test_local_edges_delta_maintenance(spark):
     """apply_delta-maintained adjacency == a fresh collect over the
     post-delta graph (the streaming steady-state contract), and a
-    retraction the cache never saw trips ``dirty``."""
+    retraction with nothing left to remove trips ``dirty``.  Edges are
+    a multiset: ex:p1 -> ex:p2 arrives through both ex:knows and
+    ex:worksFor, and retracting one keeps the other's edges."""
     from shacl_spark.shacl.incremental import collect_local_edges
 
     fp = shapes_footprint(parse_shapes_graph(SHAPES))
-    base = _base_rows()
+    base = _base_rows() + [("ex:p1", "ex:worksFor", "ex:p2")]
     added = [
         ("ex:p9", T, "ex:Person"),
         ("ex:p9", "ex:knows", "ex:p0"),
         ("ex:p9", "ex:name", "N9", "literal", STR),
     ]
-    removed = [("ex:p0", "ex:knows", "ex:rock")]
+    removed = [("ex:p0", "ex:knows", "ex:rock"), ("ex:p1", "ex:knows", "ex:p2")]
     new_rows = [r for r in base if r not in removed] + added
 
     maintained = collect_local_edges(triples_from_rows(spark, base), fp, 500_000)
-    delta = [r.asDict() for r in triples_from_rows(spark, added).collect()]
-    for r in triples_from_rows(spark, removed).collect():
-        d = r.asDict()
-        d["op"] = "-"
-        delta.append(d)
-    maintained.apply_delta(delta, fp)
+    delta = _op_rows(spark, added, "+").unionByName(_op_rows(spark, removed, "-"))
+    maintained.apply_delta(delta.toArrow(), fp)
     assert not maintained.dirty
 
     fresh = collect_local_edges(triples_from_rows(spark, new_rows), fp, 500_000)
@@ -310,8 +348,10 @@ def test_local_edges_delta_maintenance(spark):
     def _norm(adj):
         return {k: sorted(v) for k, v in adj.items() if v}
 
+    got, want = maintained.as_dicts(), fresh.as_dicts()
     for fam in ("dep", "rdep", "cdep", "crdep"):
-        assert _norm(getattr(maintained, fam)) == _norm(getattr(fresh, fam)), fam
+        assert _norm(got[fam]) == _norm(want[fam]), fam
+    assert got["dep"]["ex:p2"] == ["ex:p1"]  # the ex:worksFor twin survived
     assert maintained.n_rows == fresh.n_rows
 
     # incremental with the maintained cache == full validation
@@ -330,8 +370,15 @@ def test_local_edges_delta_maintenance(spark):
     assert st["edge_mode"] == "cached"
     assert _canon(inc) == _canon(validate(spark, new_df, SHAPES))
 
-    # retracting an edge that was never added must trip the drift flag
-    # (use the ex:knows row — a footprint predicate; rdf:type is not)
-    bogus = dict(delta[1], op="-", subj="ex:neverthere")
-    maintained.apply_delta([bogus], fp)
+    # ex:p2 -> ex:p1 is left once (via ex:worksFor): retracting it
+    # through both predicates has one retraction with nothing to remove
+    twice = [("ex:p1", "ex:worksFor", "ex:p2"), ("ex:p1", "ex:knows", "ex:p2")]
+    maintained.apply_delta(_op_rows(spark, twice, "-").toArrow(), fp)
     assert maintained.dirty
+
+    # so does retracting an edge whose node the cache never saw (use
+    # the ex:knows row — a footprint predicate; rdf:type is not)
+    fresh.apply_delta(
+        _op_rows(spark, [("ex:neverthere", "ex:knows", "ex:p0")], "-").toArrow(), fp
+    )
+    assert fresh.dirty

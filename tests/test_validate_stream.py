@@ -147,6 +147,33 @@ def test_edge_cache_steady_state(spark, tmp_path):
     assert _canon(sv.current_report()) == _canon(full)
 
 
+def test_edge_cache_dropped_when_vocab_outgrows_cap(spark, tmp_path, monkeypatch):
+    """Retractions never prune the edge cache's vocab: churning adds and
+    retractions grows it by two strings a round while the edge count
+    stays put, and the cache is dropped once the vocab passes twice the
+    edge-collect cap (the next batch rebuilds it from the target)."""
+    from shacl_spark.shacl import incremental as inc_mod
+
+    monkeypatch.setattr(inc_mod, "EDGE_COLLECT_MAX", 4)
+    sv = StreamingValidator(
+        spark, SHAPES, str(tmp_path / "t"), str(tmp_path / "r"), n_parts=4
+    )
+    fp = inc_mod.shapes_footprint(sv.shapes)
+    sv._edges = inc_mod.collect_local_edges(triples_from_rows(spark, BATCH1), fp, 4)
+    assert sv._edges.n_rows == 1  # ex:a -ex:knows-> ex:rock: two strings
+    rounds = 0
+    while sv._edges is not None:
+        rounds += 1
+        assert rounds <= 4
+        row = [(f"ex:s{rounds}", "ex:knows", f"ex:o{rounds}")]
+        for op in "+-":
+            if sv._edges is not None:
+                assert not sv._edges.dirty and sv._edges.n_rows <= 2
+                sv._roll_edges(triples_from_rows(spark, row).withColumn("op", F.lit(op)))
+    # 2 + 2 per round strings: the 4th round's add passes 2 × 4
+    assert rounds == 4
+
+
 def _batch_df(spark, rows):
     return triples_from_rows(spark, rows).select(SIX)
 
